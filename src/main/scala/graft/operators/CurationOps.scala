@@ -772,7 +772,7 @@ object CurationOps {
        |SELECT count(*) AS n_rows,
        |  bit_xor(${graft.functions.Exprs.sqlMd5Long("row_str")}) AS checksum
        |FROM r""".stripMargin) { (s, d) =>
-    val orcDir = graft.CachedPlans.cachedPath(s, s"curation.orcCopy:$d") {
+    val orcDir = graft.CachedPlans.cachedValue(s, s"curation.orcCopy:$d") {
       val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString
       Tables.documents(s, d).write.mode("overwrite").orc(dir)
       dir
@@ -821,7 +821,7 @@ object CurationOps {
         |{"name":"doc_id","type":"long"},{"name":"lang","type":"string"},
         |{"name":"source","type":"string"},{"name":"n_chars","type":"long"},
         |{"name":"text","type":"string"}]}""".stripMargin
-    val avroDir = graft.CachedPlans.cachedPath(s, s"curation.avroCopy:$d") {
+    val avroDir = graft.CachedPlans.cachedValue(s, s"curation.avroCopy:$d") {
       // base dir must be visible to ALL executors AND the driver —
       // java.io.tmpdir satisfies that in local mode; a cluster points
       // this conf at an HDFS/S3A path. All I/O below goes through the

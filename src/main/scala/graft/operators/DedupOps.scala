@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
 object DedupOps {
 
   /** Times each shared index's BUILD lambda actually ran this JVM —
-    * the zero-rebuild proof for [[DedupIndexStore]]: after save → wipe
+    * the zero-rebuild proof for [[IndexStore]]: after save → wipe
     * → load, serving queries must leave every counter untouched. */
   private[graft] val buildCount =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()

@@ -589,16 +589,6 @@ object EmbedOps {
   private[operators] def kmLloyd(
       xs: org.apache.spark.sql.DataFrame): Array[Array[Long]] = kmLloydK(xs, KmK)
 
-  // Exact-Lloyd centroids per (session → dir): the schedule is fully
-  // deterministic, so caching changes nothing but cost — without it,
-  // every consumer (emb_kmeans / emb_silhouette / knn_ivf_exact) re-ran
-  // the 2-update collect loop over the corpus (the r7 bench's 21 s
-  // knn_ivf_exact cold pass). Same weak-session registry discipline as
-  // IvfIndex's MLlib quantizer.
-  private val kmCentroidReg =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, Array[Array[Long]]]]()
-
   /** Registry-persisted scaled corpus (the Lloyd loop scans it twice,
     * the assignment once — persist beats three parquet re-reads). */
   private[operators] def kmScaledShared(s: org.apache.spark.sql.SparkSession,
@@ -610,59 +600,17 @@ object EmbedOps {
     * discipline). */
   @volatile private[graft] var lloydRuns = 0
 
-  private def kmRegFor(s: org.apache.spark.sql.SparkSession)
-      : scala.collection.mutable.Map[String, Array[Array[Long]]] =
-    kmCentroidReg.synchronized {
-      var x = kmCentroidReg.get(s)
-      if (x == null) {
-        x = scala.collection.mutable.Map.empty[String, Array[Array[Long]]]
-        kmCentroidReg.put(s, x)
-      }
-      x
-    }
-
-  /** Get-or-run the exact Lloyd schedule's final centroids. */
+  /** Get-or-run the exact Lloyd schedule's final centroids. The
+    * schedule is fully deterministic, so the registry changes nothing
+    * but cost — without it every consumer (emb_kmeans / emb_silhouette
+    * / knn_ivf_exact) re-ran the 2-update collect loop over the corpus
+    * (the r7 bench's 21 s knn_ivf_exact cold pass). */
   private[operators] def kmCentroids(s: org.apache.spark.sql.SparkSession,
-      d: String): Array[Array[Long]] = {
-    val m = kmRegFor(s)
-    m.synchronized(m.getOrElseUpdate(d, { lloydRuns += 1; kmLloyd(kmScaledShared(s, d)) }))
-  }
-
-  /** Persist the exact-k-means index (centroids + assignment) to
-    * `dir` — the [[IvfIndex.save]] discipline for the Lloyd family. */
-  private[graft] def kmSave(s: org.apache.spark.sql.SparkSession,
-      d: String, dir: String): Unit = {
-    import s.implicits._
-    kmCentroids(s, d).zipWithIndex
-      .map { case (c, k) => (k, c.toSeq) }.toSeq
-      .toDF("k", "cs")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/km_centroids")
-    kmAssigned(s, d).write.mode("overwrite").parquet(s"$dir/km_assigned")
-  }
-
-  /** Load a saved exact-k-means index: centroids into the driver
-    * registry (no Lloyd loop), assignment into the plan registry. */
-  private[graft] def kmLoad(s: org.apache.spark.sql.SparkSession,
-      d: String, dir: String): Unit = {
-    val cents = s.read.parquet(s"$dir/km_centroids")
-      .select(col("k"), col("cs")).orderBy(col("k"))
-      .collect().map(_.getSeq[Long](1).toArray)
-    require(cents.nonEmpty, s"no k-means centroids under $dir")
-    val m = kmRegFor(s)
-    m.synchronized(m.update(d, cents))
-    graft.CachedPlans.invalidate(s, s"emb.kmAssigned:$d")
-    graft.CachedPlans.cached(s, s"emb.kmAssigned:$d")(s.read.parquet(s"$dir/km_assigned"))
-    ()
-  }
-
-  /** Drop the exact-k-means index from this session (fresh-session
-    * half of the save→wipe→load spec). */
-  private[graft] def kmWipe(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val m = kmRegFor(s)
-    m.synchronized(m.remove(d))
-    graft.CachedPlans.invalidate(s, s"emb.kmAssigned:$d")
-    graft.CachedPlans.invalidate(s, s"emb.kmScaled:$d")
-  }
+      d: String): Array[Array[Long]] =
+    graft.CachedPlans.cachedValue(s, s"emb.kmCentroids:$d") {
+      lloydRuns += 1
+      kmLloyd(kmScaledShared(s, d))
+    }
 
   /** Registry-persisted exact cell assignment (vec_id, xs, d0..d3, k,
     * dist) — the build-once/serve-many frame all exact-k-means
@@ -712,9 +660,9 @@ object EmbedOps {
   }
 
   /** Exact-arithmetic Lloyd k-means over the embedding corpus — the
-    * engine's own deterministic clustering op (knn_ivf's Spark-ML
-    * coarse quantizer stays rows-only because MLlib's float kernels
-    * aren't SQL-expressible; THIS op is built to be oracle-checked).
+    * engine's own deterministic clustering op, built to be
+    * oracle-checked (since r15 knn_ivf's 16-cell quantizer runs the
+    * same schedule through [[kmLloydK]]).
     * Every quantity is an exact integer: components snap once to
     * micros (the emb_pca discipline), centroids are FLOOR-SNAPPED to
     * integer micros after each mean update (truncating division —

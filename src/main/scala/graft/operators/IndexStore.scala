@@ -3,9 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Disk persistence for EVERY session-shared index in
-  * [[SharedIndexes]] — the [[DedupIndexStore]]/[[IvfIndex]] save/load
-  * discipline extended to the whole registry (exact-k-means cells, PQ
-  * codes, basket pairs, trade edges), so the offline build phase
+  * [[SharedIndexes.catalogue]], so the offline build phase
   * (`dedup_candidate_index`) serves WARM from disk on a fresh session
   * instead of re-deriving every frame. At 100 TB this is the
   * difference between an index build being a scheduled offline job and
@@ -14,16 +12,16 @@ import org.apache.spark.sql.SparkSession
   *
   * Layout: one directory per (format version, source dir) under
   * `spark.graft.index.store.dir` (default: java.io.tmpdir/
-  * graft-index-store). The whole store is STAGED into a writer-unique
+  * graft-index-store), holding one sub-directory per catalogue
+  * artifact. The whole store is STAGED into a writer-unique
   * sibling and published by one atomic rename (r11) — the
   * `_complete.txt` marker inside it carries the source dir plus a
   * fingerprint of the source parquet files (name, length, mtime and a
   * first-KB content hash per part-file): a regenerated corpus at the
   * same path — or a crashed/concurrent writer's debris — never
-  * serves. Loading
-  * registers each parquet artifact in [[graft.CachedPlans]] under the
-  * SAME key its builder uses, so every consumer serves the loaded
-  * frame transparently; the per-family build counters
+  * serves. Loading registers each artifact in [[graft.CachedPlans]]
+  * under the SAME key its builder uses, so every consumer serves the
+  * loaded frame transparently; the per-family build counters
   * (DedupOps.buildCount, IvfIndex.fitCount, EmbedOps.lloydRuns/
   * pqBuilds, GraphOps.edgeBuilds, AffinityOps.pairBuilds) stay
   * untouched on the serve path — IndexStoreSpec pins that.
@@ -38,8 +36,10 @@ object IndexStore {
     * v2 (r11): + knn_graph_edges. v3 (r12): + text_tokens.
     * v4 (r15): IVF centroids are exact-Lloyd BIGINT micros (schema
     * change: centroid Array[Double] → Array[Long]).
-    * v5 (r15): + dedup minhash_sigs. v6 (r15): + dedup ngram_pairs. */
-  val FormatVersion = 6
+    * v5 (r15): + dedup minhash_sigs. v6 (r15): + dedup ngram_pairs.
+    * v7: one flat directory per catalogue artifact; both centroid
+    * sets stored as (k, cs); no `_source.txt`. */
+  val FormatVersion = 7
 
   private[graft] def enabled(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.index.store.enabled").map(_.trim.toLowerCase) match {
@@ -107,17 +107,6 @@ object IndexStore {
         new String(java.nio.file.Files.readAllBytes(p), "UTF-8") == markerContent(d)
     } catch { case _: java.io.IOException => false }
 
-  /** (artifact name, registry key) for the frames stored as plain
-    * parquet — the families with driver-side state (dedup, IVF,
-    * exact k-means) delegate to their own save/load below. */
-  private def plainEntries(d: String): Seq[(String, String)] = Seq(
-    ("trade_edges", s"graph.tradeEdges:$d"),
-    ("und_edges", s"graph.undTradeEdges:$d"),
-    ("basket_pairs", s"affinity.pairs:$d"),
-    ("pq_codes", s"emb.pqCodes:$d"),
-    ("knn_graph_edges", s"knn.graphEdges:$d"),
-    ("text_tokens", s"text.tokens:$d"))
-
   private val saveLock = new Object
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
@@ -142,15 +131,7 @@ object IndexStore {
     val dir = dirFor(s, d)
     val stage = s"$dir.stage-${java.util.UUID.randomUUID().toString.take(8)}"
     try {
-      GraphOps.tradeEdges(s, d).write.mode("overwrite").parquet(s"$stage/trade_edges")
-      GraphOps.undirectedTradeEdges(s, d).write.mode("overwrite").parquet(s"$stage/und_edges")
-      AffinityOps.basketPairs(s, d).write.mode("overwrite").parquet(s"$stage/basket_pairs")
-      EmbedOps.pqCodes(s, d).write.mode("overwrite").parquet(s"$stage/pq_codes")
-      KnnOps.knnGraphEdges(s, d).write.mode("overwrite").parquet(s"$stage/knn_graph_edges")
-      TextOps.tokenized(s, d).write.mode("overwrite").parquet(s"$stage/text_tokens")
-      DedupIndexStore.save(s, d, stage)
-      IvfIndex.save(s, d, s"$stage/ivf")
-      EmbedOps.kmSave(s, d, stage)
+      SharedIndexes.catalogue.foreach(_.save(s, d, stage))
       java.nio.file.Files.write(markerPath(stage),
         markerContent(d).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       publish(java.nio.file.Paths.get(stage), java.nio.file.Paths.get(dir), s, d)
@@ -232,23 +213,11 @@ object IndexStore {
   /** Swap every saved artifact into this session's plan registry —
     * consumers serve from disk with zero rebuilds. Caller must have
     * checked [[isComplete]]. */
-  private[graft] def loadAll(s: SparkSession, d: String): Unit = {
-    val dir = dirFor(s, d)
-    plainEntries(d).foreach { case (name, key) =>
-      graft.CachedPlans.invalidate(s, key)
-      graft.CachedPlans.cached(s, key)(s.read.parquet(s"$dir/$name"))
-    }
-    DedupIndexStore.load(s, d, dir)
-    IvfIndex.load(s, d, s"$dir/ivf")
-    EmbedOps.kmLoad(s, d, dir)
-  }
+  private[graft] def loadAll(s: SparkSession, d: String): Unit =
+    SharedIndexes.catalogue.foreach(_.load(s, d, dirFor(s, d)))
 
-  /** Drop every shared index from this session's registries — the
+  /** Drop every shared index from this session's registry — the
     * fresh-session half of the save→wipe→load spec. */
-  private[graft] def wipeSession(s: SparkSession, d: String): Unit = {
-    plainEntries(d).foreach { case (_, key) => graft.CachedPlans.invalidate(s, key) }
-    DedupIndexStore.wipeSession(s, d)
-    IvfIndex.rebuild(s, d)
-    EmbedOps.kmWipe(s, d)
-  }
+  private[graft] def wipeSession(s: SparkSession, d: String): Unit =
+    SharedIndexes.catalogue.foreach(_.wipe(s, d))
 }

@@ -39,20 +39,6 @@ object IvfIndex {
     * one fit" and a spec asserts it. */
   @volatile private[graft] var fitCount = 0
 
-  // centroids per (session → dir); sessions held weakly like CachedPlans
-  private val centroidReg =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Array[Array[Long]]]]()
-
-  private def regFor(s: SparkSession): scala.collection.mutable.Map[String, Array[Array[Long]]] =
-    centroidReg.synchronized {
-      var m = centroidReg.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, Array[Array[Long]]]
-        centroidReg.put(s, m)
-      }
-      m
-    }
-
   /** Unit-normalized corpus WITH labels — the one normalization pass
     * every serve-path consumer (brute / classify / filtered / MMR /
     * range / outlier / hard-negative) reads; registry-persisted so the
@@ -72,21 +58,14 @@ object IvfIndex {
   /** Get-or-train the coarse quantizer's centroids for this corpus —
     * integer micros, [[EmbedOps.kmLloydK]] at 16 cells over the SAME
     * registry-persisted scaled corpus emb_kmeans clusters (one
-    * snap-to-micros pass feeds both quantizers). The fit runs under
-    * the registry lock: check-then-fit-then-insert would let two
-    * cold-start callers both pay the Lloyd loop (and break the
-    * one-fit contract KnnSpec pins); holding the lock for the fit is
-    * correct and the contention window exists only on the first call
-    * per corpus. */
-  def centroidsOf(s: SparkSession, d: String): Array[Array[Long]] = {
-    val m = regFor(s)
-    m.synchronized {
-      m.getOrElseUpdate(d, {
-        fitCount += 1
-        EmbedOps.kmLloydK(EmbedOps.kmScaledShared(s, d), K_CELLS)
-      })
+    * snap-to-micros pass feeds both quantizers). The registry's
+    * single-flight build means two cold-start callers pay ONE Lloyd
+    * loop (the one-fit contract KnnSpec pins). */
+  def centroidsOf(s: SparkSession, d: String): Array[Array[Long]] =
+    graft.CachedPlans.cachedValue(s, s"knn.ivf.centroids:$d") {
+      fitCount += 1
+      EmbedOps.kmLloydK(EmbedOps.kmScaledShared(s, d), K_CELLS)
     }
-  }
 
   /** Persisted cell assignment (vec_id, u, cell) — the inverted file.
     * One linear pass, NO join: the projection carries both the unit
@@ -107,39 +86,7 @@ object IvfIndex {
   /** Drop this corpus's index (quantizer + assignment) so the next
     * access retrains — the rebuild entry point after corpus growth. */
   def rebuild(s: SparkSession, d: String): Unit = {
-    val m = regFor(s)
-    m.synchronized(m.remove(d))
+    graft.CachedPlans.invalidate(s, s"knn.ivf.centroids:$d")
     graft.CachedPlans.invalidate(s, s"knn.ivf.assigned:$d")
-  }
-
-  /** Persist the index to disk: the 16 centroids (tiny) plus the
-    * materialized inverted file — the artifact the offline build job
-    * ships so serve clusters (and later sessions) never pay the
-    * Lloyd fit or the corpus assignment pass again. */
-  def save(s: SparkSession, d: String, indexDir: String): Unit = {
-    import s.implicits._
-    centroidsOf(s, d).zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    assigned(s, d).write.mode("overwrite").parquet(s"$indexDir/assigned")
-  }
-
-  /** Load a saved index: centroids go into the quantizer registry (so
-    * serve-path routing works with ZERO fits — KnnSpec pins fitCount)
-    * and the saved assignment becomes the session's persisted inverted
-    * file, replacing whatever was cached. */
-  def load(s: SparkSession, d: String, indexDir: String): Unit = {
-    val cents = s.read.parquet(s"$indexDir/centroids")
-      .select(col("cell"), col("centroid")).orderBy(col("cell"))
-      .collect().map(_.getSeq[Long](1).toArray)
-    require(cents.nonEmpty, s"no centroids found under $indexDir")
-    val m = regFor(s)
-    m.synchronized(m.update(d, cents))
-    graft.CachedPlans.invalidate(s, s"knn.ivf.assigned:$d")
-    graft.CachedPlans.cached(s, s"knn.ivf.assigned:$d") {
-      s.read.parquet(s"$indexDir/assigned")
-    }
-    ()
   }
 }

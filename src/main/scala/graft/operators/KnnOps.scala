@@ -781,12 +781,12 @@ object KnnOps {
   }
 
   /** ORACLE-CHECKED IVF: inverted-file ANN whose every step is exact
-    * integer arithmetic — the hash-green counterpart of [[ivf]] (whose
-    * MLlib KMeans quantizer keeps it rows-only). Cells come from
-    * EmbedOps' exact-arithmetic Lloyd clustering (micros-snapped
-    * vectors, floor-snapped centroids); each query probes its
-    * nprobe=2 nearest cells by exact L2-micros distance and ranks the
-    * probed cells' members by the same integer metric, ties to the
+    * integer arithmetic — a 4-cell exact IVF beside [[ivf]]'s 16-cell
+    * index. Cells come from EmbedOps' exact-arithmetic Lloyd
+    * clustering (micros-snapped vectors, floor-snapped centroids);
+    * each query probes its nprobe=2 nearest cells by exact L2-micros
+    * distance and ranks the probed cells' members by the same integer
+    * metric, ties to the
     * smaller id — so the full index→probe→rank path hash-matches
     * DuckDB. Scale shape: the corpus is scanned once to assign cells
     * (map-side vs 4 broadcast literal centroids); a probe touches
@@ -843,8 +843,8 @@ object KnnOps {
 
   /** ORACLE-CHECKED LSH recall@10 audit — the per-query hit count of
     * [[lsh]] against the exact [[brute]] top-10 as EXACT integers.
-    * knn_ivf_recall_curve stays rows-only (its MLlib quantizer isn't
-    * SQL-expressible); this leg closes the ANN-audit family with a
+    * Beside the oracle-checked knn_ivf_recall_curve (exact Lloyd
+    * since r15), this leg closes the ANN-audit family with a
     * hash-checkable recall number, possible since r7b made the LSH
     * path fully deterministic (md5-seeded planes) and r8 kept its
     * signatures bit-identical through the native kernel. Cost is the

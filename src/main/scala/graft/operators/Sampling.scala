@@ -663,7 +663,8 @@ object Sampling {
     final case class Dom(source: String, nDocs: Long, dPpm: Long, var w: Long)
     val doms = census.map(r =>
       Dom(r.getString(0), r.getLong(1), r.getLong(2), 1000000L / k))
-    for (_ <- 1 to 3) {
+    // an empty corpus has no domains: no rounds, the empty frame out
+    for (_ <- 1 to 3 if k > 0) {
       val avg = doms.map(x => x.w * x.dPpm).sum / 1000000L
       val raws = doms.map { x =>
         val excess = math.max(0L, x.dPpm - avg)

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * r16 (optimization): the loaded [[DataFrame]] is memoized per
   * (session, dir, table). Every `spark.read.parquet(path)` call pays
   * file listing + parquet-footer schema inference on the DRIVER
-  * (~0.1 s per call on this box, measured by graft.tools.Probe16 —
-  * and it is NOT cached across calls), so a 450-query bench pass was
+  * (~0.1 s per call, measured in r16 — OPTIMIZATION_r16.md — and it
+  * is NOT cached across calls), so a 450-query bench pass was
   * re-inferring the same ten schemas hundreds of times. A catalog
   * keeps table metadata resolved once; the memo reproduces that. Only
   * METADATA (the analyzed relation / file list) is reused — execution

@@ -25,12 +25,27 @@ import graft.{CachedPlans, GraftSession, SparkEntry}
   * clears 0.5 s.
   */
 object ScaleCurve {
+  private val Usage =
+    "usage: ScaleCurve <dir>x<mult> [<dir>x<mult> ...] [-- <op> ...]"
+  private val DirArg = "^(.+)x([0-9.]+)$".r
+
+  /** A dir argument's (corpus dir, positive scale multiple); None when
+    * the trailing `x<mult>` is missing or not a number. */
+  private[graft] def parseDirArg(a: String): Option[(String, Double)] = a match {
+    case DirArg(dir, mult) => mult.toDoubleOption.filter(_ > 0).map(dir -> _)
+    case _ => None
+  }
+
   def main(args: Array[String]): Unit = {
     val (dirArgs, opArgs) = args.span(_ != "--")
-    val dirs: Seq[(String, Double)] = dirArgs.toSeq.map { a =>
-      val i = a.lastIndexOf('x')
-      (a.substring(0, i), a.substring(i + 1).toDouble)
+    val parsed = dirArgs.toSeq.map(a => a -> parseDirArg(a))
+    val bad = parsed.collect { case (a, None) => a }
+    if (parsed.isEmpty || bad.nonEmpty) {
+      if (bad.nonEmpty) System.err.println(s"bad dir argument(s): ${bad.mkString(" ")}")
+      System.err.println(Usage)
+      sys.exit(2)
     }
+    val dirs: Seq[(String, Double)] = parsed.flatMap(_._2)
     val defaultOps = Seq(
       "dedup_candidate_index", "dedup_containment", "q_spearman",
       "sample_doremi", "knn_graph_search", "graph_triangles",

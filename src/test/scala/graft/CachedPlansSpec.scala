@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -85,5 +86,39 @@ class CachedPlansSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("spark.graft.cache.maxFrames"))
     } finally spark.conf.unset("spark.graft.cache.maxFrames")
+  }
+
+  test("concurrent get-or-build of one key runs the builder once; the frame stays persisted") {
+    val key = "cps.singleflight"
+    CachedPlans.invalidate(spark, key)
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val entered = new java.util.concurrent.CountDownLatch(2)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    def get(): DataFrame = CachedPlans.cached(spark, key) {
+      builds.incrementAndGet()
+      entered.countDown()
+      release.await()
+      frame(300)
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val call = new java.util.concurrent.Callable[DataFrame] { def call(): DataFrame = get() }
+    try {
+      val a = pool.submit(call)
+      val b = pool.submit(call)
+      // a second builder entering (the race) shows up well inside this
+      // window; a single-flight registry leaves the latch at 1
+      entered.await(500, java.util.concurrent.TimeUnit.MILLISECONDS)
+      release.countDown()
+      val (fa, fb) = (a.get(60, java.util.concurrent.TimeUnit.SECONDS),
+        b.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get === 1, "both threads ran the builder")
+      assert(fa eq fb, "the two callers got different frames")
+      assert(fa.storageLevel === StorageLevel.MEMORY_AND_DISK_SER,
+        "the served frame was unpersisted by the race")
+    } finally {
+      release.countDown()
+      pool.shutdown()
+      CachedPlans.invalidate(spark, key)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The build-once/serve-many split must survive a session restart:
-  * save the text-side shared indexes to parquet, WIPE the session
+  * save the text-side (dedup_*) catalogue rows to parquet, WIPE the session
   * registry (the fresh-session stand-in — same JVM, zero cached
   * frames), load, and serve the dedup family. DedupOps.buildCount
   * pins that no build lambda ran after the load (the KnnSpec
@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DedupIndexPersistSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
+  private val dedup = graft.operators.SharedIndexes.catalogue.filter(_.name.startsWith("dedup_"))
 
   test("save -> wipe -> load serves dedup_ngram/minhash/clusters with zero rebuilds") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-idx").toString
@@ -22,11 +23,11 @@ class DedupIndexPersistSpec extends AnyFunSuite {
     val clusters0 = run("dedup_clusters")
     val simhash0 = run("dedup_simhash")
 
-    graft.operators.DedupIndexStore.save(spark, sf, dir)
+    dedup.foreach(_.save(spark, sf, dir))
     val counts = new java.util.HashMap(graft.operators.DedupOps.buildCount)
 
-    graft.operators.DedupIndexStore.wipeSession(spark, sf)
-    graft.operators.DedupIndexStore.load(spark, sf, dir)
+    dedup.foreach(_.wipe(spark, sf))
+    dedup.foreach(_.load(spark, sf, dir))
 
     assert(run("dedup_ngram") === ngram0)
     assert(run("dedup_minhash") === minhash0)
@@ -39,7 +40,7 @@ class DedupIndexPersistSpec extends AnyFunSuite {
   test("load refuses a directory with missing artifacts") {
     val empty = java.nio.file.Files.createTempDirectory("graft-dedup-empty").toString
     intercept[IllegalArgumentException] {
-      graft.operators.DedupIndexStore.load(spark, sf, empty)
+      dedup.foreach(_.load(spark, sf, empty))
     }
   }
 }

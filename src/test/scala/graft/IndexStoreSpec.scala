@@ -23,6 +23,10 @@ class IndexStoreSpec extends AnyFunSuite {
       IndexStore.wipeSession(spark, sf)
       val counts0 = SharedIndexes.materializeAll(spark, sf)
       assert(IndexStore.isComplete(spark, sf), "store not marked complete after build")
+      // the catalogue's keys are the ones its builders register under
+      val unregistered = for (i <- SharedIndexes.catalogue; a <- i.artifacts
+        if !CachedPlans.contains(spark, a.key(sf))) yield s"${i.name}/${a.name}"
+      assert(unregistered.isEmpty, s"catalogue keys no builder registers: $unregistered")
 
       val dedupCounts = new java.util.HashMap(graft.operators.DedupOps.buildCount)
       val (fits0, lloyd0, pq0, edges0, pairs0, graph0) =

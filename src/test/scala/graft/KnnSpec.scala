@@ -84,15 +84,16 @@ class KnnSpec extends AnyFunSuite {
   }
 
   test("ivf index survives a save/load round trip with zero refits") {
-    import graft.operators.IvfIndex
+    import graft.operators.{IvfIndex, SharedIndexes}
+    val ivfIndex = SharedIndexes.catalogue.find(_.name == "knn_ivf_assigned").get
     val idxDir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     val before = KnnOps.ivf.run(spark, sf).collect().map(_.toString).sorted
-    IvfIndex.save(spark, sf, idxDir)
+    ivfIndex.save(spark, sf, idxDir)
     // wipe the in-session index — the load path must restore BOTH the
     // quantizer registry and the inverted file from disk
     IvfIndex.rebuild(spark, sf)
     val fits = IvfIndex.fitCount
-    IvfIndex.load(spark, sf, idxDir)
+    ivfIndex.load(spark, sf, idxDir)
     val after = KnnOps.ivf.run(spark, sf).collect().map(_.toString).sorted
     assert(IvfIndex.fitCount === fits,
       "serving from a loaded index must not refit KMeans")

@@ -69,4 +69,14 @@ class SamplingSpec extends AnyFunSuite {
       case _ => ()
     }
   }
+
+  test("sample_doremi on an empty documents table: empty frame, op's schema") {
+    val empty = java.nio.file.Files.createTempDirectory("graft-doremi-empty").toString
+    graft.sources.Tables.documents(spark, sf).limit(0)
+      .write.parquet(s"$empty/documents.parquet")
+    val expected = SparkEntry.queries("sample_doremi")(spark, sf).schema
+    val out = SparkEntry.queries("sample_doremi")(spark, empty)
+    assert(out.schema === expected)
+    assert(out.collect().isEmpty)
+  }
 }
